@@ -447,7 +447,10 @@ def main() -> None:
         # fixed pure-CPU Spark job (min-of-2) — the machine-speed
         # yardstick for normalizing wall times across rounds
         "canary_sec": canary_sec,
-        "cpus": os.cpu_count(),
+        # the slot count the session honored ($SPARK_GRAFT_CPUS via
+        # get_spark), not the host's core count
+        "cpus": sc.defaultParallelism,
+        "master": sc.master,
         "repeat": repeat,
     }
     full = {

@@ -1166,14 +1166,16 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _quality_exprs,
     )
 
-    from end2end_data_pipeline_spark.sources.tables import model_memo_key
+    from end2end_data_pipeline_spark.sources.tables import (
+        model_memo_key,
+        stream_table,
+    )
 
     # (applicationId, abspath, mtime, size) via the shared builder so
     # regenerating documents.parquet at the same path within one
     # application can never serve a stale drained table (r10 advice;
     # r12 review: this was the fourth inline copy of the key pattern
     # model_memo_key unified)
-    docs_path = _os.path.join(sf_dir, "documents.parquet")
     key = model_memo_key(spark, sf_dir, "documents")
     table = _CURATION_REPLAY.get(key)
     if table is None or not spark.catalog.tableExists(table):
@@ -1195,23 +1197,8 @@ def curation_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         dsel = _dsir_perdoc(spark, sf_dir).select("doc_id", "selected")
 
-        # the file-stream source requires a DIRECTORY; the standard
-        # fixture ships documents.parquet as a single file, so expose
-        # it through a symlink dir (stress fixtures write directories
-        # and stream as-is)
-        if _os.path.isdir(docs_path):
-            stream_dir = docs_path
-        else:
-            stream_dir = _os.path.join(scratch, "src")
-            _os.makedirs(stream_dir, exist_ok=True)
-            _os.symlink(
-                _os.path.abspath(docs_path),
-                _os.path.join(stream_dir, "documents.parquet"),
-            )
-        schema = spark.read.parquet(docs_path).schema
         flagged_stream = (
-            spark.readStream.schema(schema)
-            .parquet(stream_dir)
+            stream_table(spark, sf_dir, "documents")
             .select(
                 "doc_id",
                 "source",

@@ -33,6 +33,7 @@ from end2end_data_pipeline_spark.functions import vectors as vec
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
     fan_out,
+    frame_memo_tag,
     load_table,
     model_memo_key,
     session_cached,
@@ -92,7 +93,7 @@ def _fit_model(
     memo_key = model_memo_key(spark, sf_dir, "embeddings")
     base = session_cached(
         spark,
-        f"kmeans_qbase:{sf_dir}",
+        frame_memo_tag(sf_dir, "kmeans_qbase"),
         # NULL embeddings (a source that never filled the column) are
         # excluded from clustering — they cannot seed, cannot be
         # assigned, and a NULL seed crashed the centroid collect

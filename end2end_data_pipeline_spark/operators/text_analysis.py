@@ -867,7 +867,7 @@ def _bpe_train(
     convention."""
     vocab = session_cached(
         spark,
-        f"bpe_seq_vocab:{sf_dir}",
+        frame_memo_tag(sf_dir, "bpe_seq_vocab"),
         fan_out(spark, load_table(spark, sf_dir, "documents"))
         .select(F.explode(F.split("text", " ")).alias("w"))
         .where((F.col("w") != "") & (~F.col("w").contains("|")))

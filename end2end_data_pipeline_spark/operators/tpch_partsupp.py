@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import query
 from end2end_data_pipeline_spark.sources.tables import (
+    frame_memo_tag,
     load_table,
     session_cached,
 )
@@ -79,7 +80,7 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     return session_cached(
         spark,
-        f"derived_partsupp:{sf_dir}",
+        frame_memo_tag(sf_dir, "derived_partsupp"),
         keys.select(
             "ps_partkey",
             "ps_suppkey",

@@ -42,7 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from end2end_data_pipeline_spark.registry import ORACLE, query
-from end2end_data_pipeline_spark.sources.tables import load_table, sf_tag
+from end2end_data_pipeline_spark.sources.tables import (
+    load_table,
+    sf_tag,
+    stream_table,
+)
 
 # Fixed day-1 slice: every testdata SF spans 2024-01-01 .. 2024-01-30,
 # so the literal is deterministic across scale factors (TESTDATA.md).
@@ -60,21 +64,11 @@ _REPLAY_IDS = itertools.count()
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-stream source over the ``events`` table for the replay
-    queries, handling BOTH fixture layouts: a single-file table
-    streams via a glob over ``sf_dir`` (the file source rejects a
-    plain file as its base path), a directory table streams directly
-    (a name glob over ``sf_dir`` would silently discover nothing
-    inside it — caught by the r9 single-row degenerate sweep). Schema
-    pinned from a footer-only batch read; ``ts`` normalized to a
-    timestamp the same way ``load_table`` does."""
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema)
-    if os.path.isdir(path):
-        raw = reader.parquet(path)
-    else:
-        raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    queries (both fixture layouts: see ``stream_table``), with ``ts``
+    normalized to a timestamp the same way ``load_table`` does."""
+    return stream_table(spark, sf_dir, "events").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
 
 
 def _day1_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,7 +14,6 @@ The only driver-side collection is O(#event_types) — never rows.
 
 from __future__ import annotations
 
-import json
 import time
 from typing import Any
 
@@ -56,13 +55,6 @@ def status_pivot_report(
             "file_name": file_name,
         }
     }
-
-
-def report_json(report: dict[str, Any]) -> str:
-    """Serialized form the reference uploads to MinIO / POSTs to the
-    dashboard API (spark.py:90-97). The REST push + store/serve side
-    lives in ``plans/report_service.py`` (stdlib, in-process)."""
-    return json.dumps(report)
 
 
 def with_derived_status(events: DataFrame, error_when: F.Column) -> DataFrame:

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLE_NAMES = (
     "region",
@@ -246,6 +246,45 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
+# (SparkSession, *model_memo_key, table, kind) -> a fixture table's
+# loaded DataFrame handle ("table") or its raw file schema ("schema").
+# Every spark.read.parquet lists the files and runs a schema-inference
+# Spark job; the handle is immutable and holds no rows, so one per
+# session and fixture file serves every later load.
+_TABLE_MEMO: dict[tuple, object] = {}
+
+
+def _fixture_memo(spark: SparkSession, sf_dir: str, name: str, kind: str, build):
+    """``build()`` once per (session, fixture file, kind). The stat-based
+    ``model_memo_key`` makes relative and absolute ``sf_dir`` share one
+    entry and gives a fixture rewritten at the same path a fresh one.
+    A build that raises stores nothing; inserting drops the entries of
+    other applications, so a long-lived process does not pin stopped
+    sessions' handles."""
+    try:
+        key = (spark, *model_memo_key(spark, sf_dir, name), name, kind)
+    except OSError:
+        # no local file to stat (a missing table, a remote URI): read
+        # unmemoized, so a missing table raises Spark's own error
+        return build()
+    hit = _TABLE_MEMO.get(key)
+    if hit is None:
+        hit = build()
+        for stale in [k for k in _TABLE_MEMO if k[1] != key[1]]:
+            del _TABLE_MEMO[stale]
+        _TABLE_MEMO[key] = hit
+    return hit
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+        # integer division keeps full precision (a double round-trip
+        # would corrupt epoch-nanos > 2^53)
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return _normalize_ntz(df)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Path layout: ``{sf_dir}/{name}.parquet``.
 
@@ -255,18 +294,49 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the same truncation DuckDB applies when casting TIMESTAMP_NS down, so
     oracle comparisons stay aligned (FIXTURES.md §4). Current fixtures
     write untagged micros, normalized by ``_normalize_ntz``.
+
+    The handle is memoized per session and fixture file (see
+    ``_fixture_memo``), so repeated loads share one DataFrame: a query
+    that joins two loads of the same table must ``alias`` them.
     """
     if name not in TABLE_NAMES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
+        # set on every call, hit or miss: plans built from the handle
+        # re-read the file, and the conf must still hold when they run
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        if isinstance(df.schema["ts"].dataType, LongType):
-            # integer division keeps full precision (a double round-trip
-            # would corrupt epoch-nanos > 2^53)
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _fixture_memo(
+        spark, sf_dir, name, "table", lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def raw_table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The fixture file's own schema, before ``load_table``'s ``ts`` and
+    NTZ normalization — what a file-stream source over the fixture
+    must declare. Memoized like ``load_table``."""
+    return _fixture_memo(
+        spark,
+        sf_dir,
+        name,
+        "schema",
+        lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet").schema,
+    )
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-stream source over one fixture table, with the raw schema
+    pinned from ``raw_table_schema``. A directory table streams
+    directly. A single-file table streams through a name glob over
+    ``sf_dir``, because the file source rejects a plain file as its
+    base path (and a name glob over ``sf_dir`` would find nothing
+    inside a directory table)."""
+    import os
+
+    path = f"{sf_dir}/{name}.parquet"
+    reader = spark.readStream.schema(raw_table_schema(spark, sf_dir, name))
+    if os.path.isdir(path):
+        return reader.parquet(path)
+    return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
 
 
 def fan_out(spark: SparkSession, df: DataFrame, partitions: int | None = None) -> DataFrame:

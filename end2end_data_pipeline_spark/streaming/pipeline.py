@@ -118,15 +118,6 @@ def start_minutely_aggregation(
     return writer.start()
 
 
-def dedup_event_stream(events: DataFrame, watermark: str = DEFAULT_WATERMARK) -> DataFrame:
-    """At-least-once -> effectively-once repair (T7): drop duplicate
-    event_ids within the watermark horizon. State is bounded by the
-    watermark — safe for unbounded streams."""
-    return events.withWatermark("event_timestamp", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-
-
 def sessionized_counts(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Session-window analytics over the stream (T6): per-user session
     event counts with a gap-based session definition — the analysis the
