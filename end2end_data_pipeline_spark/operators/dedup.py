@@ -32,6 +32,7 @@ from end2end_data_pipeline_spark.functions import texthash as th
 from end2end_data_pipeline_spark.registry import ORACLE, query
 from end2end_data_pipeline_spark.sources.tables import (
     disk_checkpoint,
+    evict,
     fan_out,
     frame_memo_tag,
     load_table,
@@ -663,8 +664,8 @@ def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (clusters, cluster-size profile) plus bench repeats
     otherwise re-run every round; the final labels are already a
     materialized LogicalRDD, so later callers just read it (and the
-    loop's own `finally: bidir.unpersist()` makes re-entry doubly
-    expensive — the edge cache is gone by then)."""
+    loop's own `finally: evict(...)` makes re-entry doubly expensive —
+    the edge cache is gone by then)."""
     return session_memoized(
         spark,
         frame_memo_tag(sf_dir, "cc_labels"),
@@ -677,9 +678,10 @@ def _cluster_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # symmetrize by exploding a 2-array of structs — a self-union
     # would run the whole LSH candidate+verify pipeline once per
     # branch during the cache build (guide §2.4; the itemitem lesson)
+    bidir_tag = frame_memo_tag(sf_dir, "cc_bidir_edges")
     bidir = session_cached(
         spark,
-        frame_memo_tag(sf_dir, "cc_bidir_edges"),
+        bidir_tag,
         edges.select(
             F.explode(
                 F.array(
@@ -739,7 +741,9 @@ def _cluster_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "MAX_CC_ITERATIONS or switch to large-star/small-star"
             )
     finally:
-        bidir.unpersist()
+        # loop-scoped cache: drop it from the frame memo too, so a
+        # failed build never leaves an unpersisted frame memoized
+        evict(spark, bidir_tag)
     return labels
 
 

@@ -82,7 +82,8 @@ def _day1_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def day1_minute_warehouse(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per session+sf) the day-1 events slice in the
     reference's warehouse layout: PARTITION BY minute, rows clustered
-    by event_type within partitions for row-group min/max skipping."""
+    by event_type within partitions for row-group min/max skipping
+    (sorted on (minute_key, event_type): see ``write_warehouse``)."""
     sf_abs = os.path.abspath(sf_dir)
     key = (spark.sparkContext.applicationId, sf_abs)
     cached = _WAREHOUSE.get(key)
@@ -96,7 +97,7 @@ def day1_minute_warehouse(spark: SparkSession, sf_dir: str) -> str:
         _day1_events(spark, sf_dir)
         .withColumn("minute_key", F.date_format("ts", MINUTE_FMT))
         .repartition("minute_key")
-        .sortWithinPartitions("event_type")
+        .sortWithinPartitions("minute_key", "event_type")
         .write.mode("overwrite")
         .partitionBy("minute_key")
         .parquet(path)

@@ -61,7 +61,7 @@ def get_spark(
         # r13 bench showed late-run LRU evictions of the shared
         # copurchase edge cache (kcore task fingerprint 170 -> 655,
         # a recompute, not a plan change). Env-overridable; the
-        # sandbox has 128 GiB.
+        # tier-1 host has 15 GB (4 cores).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
     )
     if extra_conf:

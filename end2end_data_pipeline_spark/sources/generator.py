@@ -117,10 +117,13 @@ def write_warehouse(df: DataFrame, path: str) -> None:
     """The reference's MergeTree layout as partitioned Parquet
     (``db/clickhouse_table_schema.sql:15-20``): PARTITION BY
     event_minute, rows clustered by event_type within partitions so
-    row-group stats enable min/max skipping."""
+    row-group stats enable min/max skipping. The sort leads with the
+    partition column: a partitioned write requires that ordering and
+    replaces any sort that lacks it (a bare ``event_type`` sort was
+    planned away), so one (partition, event_type) sort serves both."""
     (
         df.repartition("event_minute")
-        .sortWithinPartitions("event_type")
+        .sortWithinPartitions("event_minute", "event_type")
         .write.mode("overwrite")
         .partitionBy("event_minute")
         .parquet(path)

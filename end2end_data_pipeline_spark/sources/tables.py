@@ -53,6 +53,15 @@ def session_cached(spark: SparkSession, tag: str, frame: DataFrame) -> DataFrame
     return out
 
 
+def evict(spark: SparkSession, tag: str) -> None:
+    """Unpersist and forget the ``session_cached`` frame under ``tag``,
+    so a later call rebuilds it instead of getting back a memoized
+    frame whose cache is gone."""
+    hit = _FRAME_MEMO.pop((spark.sparkContext.applicationId, tag), None)
+    if hit is not None:
+        hit.unpersist()
+
+
 def disk_checkpoint(df: DataFrame) -> DataFrame:
     """Eager ``localCheckpoint`` at DISK_ONLY — for corpus-scale
     intermediates that feed several consumers. MEMORY_AND_DISK (the
@@ -85,7 +94,7 @@ def disk_checkpoint(df: DataFrame) -> DataFrame:
 # (applicationId, tag) -> an eagerly disk-checkpointed DataFrame; the
 # checkpoint IS the materialization, so no .cache() on top (blocks
 # would be stored twice). Same lifecycle as _FRAME_MEMO.
-_CKPT_MEMO: dict[tuple[str, str], DataFrame] = {}
+_CKPT_MEMO: dict[tuple[str, str | tuple[str, str]], DataFrame] = {}
 
 
 def session_checkpointed(spark: SparkSession, tag: str, frame: DataFrame) -> DataFrame:
@@ -113,8 +122,10 @@ def session_memoized(spark: SparkSession, tag: str, build) -> DataFrame:
     (the loop executes before it is called), so repeat invocations
     would re-run every round; this runs the loop once per
     (applicationId, tag) and hands every later caller the final
-    materialized frame. Same memo/lifecycle as the checkpoint memo."""
-    key = (spark.sparkContext.applicationId, tag)
+    materialized frame. Same memo/lifecycle as the checkpoint memo,
+    under its own ("memo", tag) keys, so a tag reused by
+    ``session_checkpointed`` can never hand back the other's frame."""
+    key = (spark.sparkContext.applicationId, ("memo", tag))
     hit = _CKPT_MEMO.get(key)
     if hit is None:
         hit = _CKPT_MEMO[key] = build()

@@ -158,43 +158,27 @@ def publish_minutely_reports(
     checkpoint; a publisher needing strict idempotence can dedupe on
     ``file_name``.
     """
-    from end2end_data_pipeline_spark.plans.report import status_pivot_report
+    from end2end_data_pipeline_spark.plans.report import REPORT_STATUSES, report_dict
 
     events = read_event_stream(spark, source_path)
     agg = minutely_status_counts(events, watermark)
 
     def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        # one tiny aggregate per closed window; collect is O(#windows x #types)
-        for minute_row in (
-            batch_df.select("event_minute").distinct().orderBy("event_minute").collect()
-        ):
-            minute = minute_row["event_minute"]
-            window_counts = batch_df.where(F.col("event_minute") == minute)
-            # rebuild the pivot shape from the already-aggregated counts
-            rows = (
-                window_counts.groupBy("event_type")
-                .pivot("status", ["ERROR", "SUCCESS"])
-                .sum("n")
-                .na.fill(0, ["ERROR", "SUCCESS"])
-                .orderBy("event_type")
-                .collect()
+        # ONE action per micro-batch: every further action would re-run
+        # the batch's scan, state shuffle and state-store load/commit.
+        # The closed windows' counts are O(#minutes x #types x #statuses)
+        # rows, so the per-minute split happens on the driver.
+        minutes: dict = {}
+        for r in batch_df.collect():
+            by_type = minutes.setdefault(r["event_minute"], {})
+            counts = by_type.setdefault(
+                r["event_type"], dict.fromkeys(REPORT_STATUSES, 0)
             )
-            by_type = {
-                r["event_type"]: {"SUCCESS": r["SUCCESS"], "ERROR": r["ERROR"]}
-                for r in rows
-            }
-            publish(
-                {
-                    "report": {
-                        "total_events": sum(
-                            v["SUCCESS"] + v["ERROR"] for v in by_type.values()
-                        ),
-                        "total_errors": sum(v["ERROR"] for v in by_type.values()),
-                        "by_event_type": by_type,
-                        "file_name": minute.strftime("%Y-%m-%d_%H-%M") + ".json",
-                    }
-                }
-            )
+            if r["status"] in counts:
+                counts[r["status"]] += r["n"]
+        for minute in sorted(minutes):
+            name = minute.strftime("%Y-%m-%d_%H-%M") + ".json"
+            publish(report_dict(minutes[minute], name))
 
     writer = (
         agg.writeStream.outputMode("append")
